@@ -61,22 +61,24 @@ object Bench {
     else math.max(1L, math.min(cpus.toLong, (bytes + (1L << 20) - 1) >> 20)).toInt
   }
 
+  /** Bench's session, shared with Profile so a profile measures the bench's
+    * shape: `local[Graft.localCores]`, shuffle partitions from
+    * SPARK_GRAFT_SHUFFLE_PARTITIONS or the scale-adaptive default above, and
+    * hashable map-typed outputs (map_funcs_orders) for force(). */
+  private[graft] def session(sfDir: String): SparkSession = {
+    val cpus = Graft.localCores
+    val spark = Graft.session(
+      master = Some(s"local[$cpus]"),
+      shufflePartitions = Some(sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+        .fold(adaptiveShufflePartitions(sfDir, cpus))(_.trim.toInt)))
+    spark.conf.set("spark.sql.legacy.allowHashOnMapType", "true")
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // scale-adaptive default, env-parameterized (see above)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-          adaptiveShufflePartitions(sfDir, cpus.toInt).toString))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // map-typed outputs (map_funcs_orders) must be hashable by force()
-      .config("spark.sql.legacy.allowHashOnMapType", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(sfDir)
     // Operators that materialize intermediates persist a new table per
     // invocation; dropping caches between queries keeps every measurement
     // hermetic (no storage-memory pressure from earlier queries).

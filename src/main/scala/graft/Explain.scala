@@ -1,20 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for selected queries.
   * Usage: runMain graft.Explain <sfDir> [queryName ...] (default: all). */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSet else SparkEntry.queries.keySet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val cpus = Graft.localCores
+    val spark = Graft.session(master = Some(s"local[$cpus]"), shufflePartitions = Some(cpus))
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.allQueries.filter(q => names(q.name)).foreach { q =>
       println(s"\n========== ${q.name} ==========")

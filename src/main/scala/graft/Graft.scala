@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Library entry point: builds a SparkSession with the engine's recommended
   * configuration and the graft SQL functions registered — the one-call path
-  * for a user switching from the reference application.
+  * for a user switching from the reference application, and the only place
+  * the engine's own mains (Bench, Verify, Explain, …) get a session from.
   *
   * Deliberate defaults (each documented where it matters):
   *  - AQE on (runtime skew-join splitting + partition coalescing);
@@ -70,6 +71,12 @@ object Graft {
         spark
     }
   }
+
+  /** Local core count the mains size their sessions by: `SPARK_GRAFT_CPUS`
+    * when set, else every core this host has. */
+  private[graft] def localCores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
 
   /** All registered batch queries by name — the engine's query surface. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = SparkEntry.queries

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 
 /** Plan audit CLI: for each named query (args, or every registered query
@@ -12,6 +11,10 @@ import org.apache.spark.sql.execution.SparkPlan
   * Prints one header line per query (`name: N generator-fed broadcasts`)
   * and the first lines of each offending build subtree. */
 object PlanAudit {
+  /** Expand one node: through the AQE wrapper, into query-stage subplans,
+    * and into cached-relation plans (a materialize boundary hides the
+    * generator that produced the cached rows, but not from the estimator —
+    * pre-materialization, stats flow straight through the cache node). */
   def kids(p: SparkPlan): Seq[SparkPlan] = p match {
     case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
       Seq(a.executedPlan)
@@ -21,7 +24,10 @@ object PlanAudit {
     case other => other.children
   }
   def allNodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(allNodes)
-  /** Keyless aggregate under the exchange = 1 row by construction. */
+  /** A keyless (global) aggregate immediately under the exchange is ONE
+    * row by construction — the "1-row stats" allowance (e.g. a corpus
+    * total crossJoined back in); only trivial row-preserving nodes may sit
+    * between the exchange and the aggregate. */
   @scala.annotation.tailrec
   def isOneRowByConstruction(p: SparkPlan): Boolean = p match {
     case pr: org.apache.spark.sql.execution.ProjectExec => isOneRowByConstruction(pr.child)
@@ -33,6 +39,8 @@ object PlanAudit {
       s.groupingExpressions.isEmpty
     case _ => false
   }
+  /** Broadcast builds in `root` whose shipped side contains a generator
+    * and is not 1-row by construction. */
   def generatorBroadcasts(root: SparkPlan): Seq[SparkPlan] =
     allNodes(root)
       .collect { case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => b }
@@ -44,13 +52,8 @@ object PlanAudit {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val cpus = Graft.localCores
+    val spark = Graft.session(master = Some(s"local[$cpus]"), shufflePartitions = Some(cpus))
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       try {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Builds the 10× "decade probe" used by SCALE.md's measured-scaling tables:
@@ -33,13 +33,8 @@ object ProbeGen {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/probe10x")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val cpus = Graft.localCores
+    val spark = Graft.session(master = Some(s"local[$cpus]"), shufflePartitions = Some(cpus))
     spark.sparkContext.setLogLevel("WARN")
 
     val keyed: Seq[(String, Seq[String])] = Seq(

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Streaming-side decade receipt (r19 verdict item 6's suggested shape):
@@ -30,13 +29,8 @@ object StreamScaleProbe {
     val probeDir = args.headOption.getOrElse("/tmp/probe10x")
     val workDir = args.lift(1).getOrElse("/tmp/stream_scale_probe")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val cpus = Graft.localCores
+    val spark = Graft.session(master = Some(s"local[$cpus]"), shufflePartitions = Some(cpus))
     spark.sparkContext.setLogLevel("WARN")
     val fs = new org.apache.hadoop.fs.Path(workDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

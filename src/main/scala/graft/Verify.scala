@@ -1,22 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet#ts has shipped as TIMESTAMP(NANOS) (readable only
-      // under this legacy flag) and as timestamp[us]; Tables.events
-      // normalizes either to LongType epoch-nanos at the load boundary.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val cpus = Graft.localCores
+    val spark = Graft.session(master = Some(s"local[$cpus]"), shufflePartitions = Some(cpus))
     spark.sparkContext.setLogLevel("WARN")
     // Artifact-buyback invariant (r18 VERDICT item 2): every declared
     // artifact-served row and its fresh twin must be registered, no twin

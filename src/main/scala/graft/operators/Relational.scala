@@ -195,7 +195,6 @@ object Relational {
       |SELECT o_orderstatus, o_orderkey,
       |       CAST(ROUND(o_totalprice*100) AS BIGINT) AS totalprice_cents
       |FROM r WHERE rn <= 5 ORDER BY o_orderstatus, o_orderkey""".stripMargin) { (s, d) =>
-    graft.GraftExtensions.register(s)
     val base = Tables.orders(s, d).select(
       col("o_orderstatus"), col("o_orderkey"),
       col("o_totalprice").cast("double").as("score"))

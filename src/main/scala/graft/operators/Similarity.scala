@@ -47,7 +47,6 @@ object Similarity {
     * DuckDB oracle), and `posexplode` numbers them. KnnPlanSpec pins the
     * plan shape; the bruteforce/int8 oracles pin the values. */
   private[graft] def topKRanked(scored: DataFrame, k: Int): DataFrame = {
-    graft.GraftExtensions.register(scored.sparkSession)
     graft.plans.TopKPerGroup(
         scored.select(col("query_id"), col("neighbor_id"), col("cos")),
         Seq(col("query_id")), col("cos"), col("neighbor_id"), k)
@@ -70,7 +69,6 @@ object Similarity {
     * back to the corpus. Same two-phase heap plan, same reasons. */
   private def topKCandidateIds(scored: DataFrame, score: Column, id: Column,
       k: Int): DataFrame = {
-    graft.GraftExtensions.register(scored.sparkSession)
     graft.plans.TopKPerGroup(scored, Seq(col("query_id")), score, id, k)
       .select(col("query_id"), id.as("neighbor_id"))
   }
@@ -1891,7 +1889,6 @@ object Similarity {
     * for the same arithmetic). */
   val knnMmrDiversify: QueryDef = QueryDef.sql(
     "knn_mmr_diversify", mmrOracleSql) { (s, d) =>
-    graft.GraftExtensions.register(s)
     val n = withNorm(Tables.embeddings(s, d))
     val q = n.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qnrm"))

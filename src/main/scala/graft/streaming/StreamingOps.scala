@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming operators for the training-data-pipeline surface, each with the
   * state-bounding story that makes it viable on an unbounded 100 TB/day
@@ -376,49 +377,40 @@ object StreamingOps extends Serializable {
     } finally survivors.unpersist()
   }
 
-  /** The continuous ingest loop — the reference's accumulate-across-rounds
-    * state model (InventoryUpdateEventGenerator.java:74-106 keeps an
-    * accumulator across send rounds) lifted to corpus scale: the persisted
-    * fingerprint store IS the accumulator, each micro-batch folds into it,
+  /** The continuous ingest loop every `ingestBatch*` runs under:
+    * `batchFn(batch, batchId)` once per micro-batch, e.g.
+    * `foreachBatchLoop(docs, ckpt)((b, _) => ingestBatch(b, store, out))`.
+    * This is the reference's accumulate-across-rounds state model
+    * (InventoryUpdateEventGenerator.java:74-106 keeps an accumulator across
+    * send rounds) lifted to corpus scale: the persisted store a batch body
+    * reads and appends IS the accumulator, each micro-batch folds into it,
     * and unlike the watermark-bounded dedup state inside [[curationStream]]
     * it never evicts. foreachBatch rather than a stateful operator because
     * the state must (a) outlive the query and be shared with the BATCH
-    * pipeline ([[graft.operators.Dedup.incremental]] reads the same store)
-    * and (b) scale past executor state stores — it lives in the lake,
-    * joined per batch, not held per key in RocksDB. */
-  def ingestLoop(
-      docs: DataFrame,
-      storePath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
+    * pipeline ([[graft.operators.Dedup.incremental]] reads the same
+    * fingerprint store) and (b) scale past executor state stores — it lives
+    * in the lake, joined per batch, not held per key in RocksDB.
+    *
+    * `trigger` defaults to Spark's own (a micro-batch as soon as the last
+    * one finishes). `Trigger.AvailableNow()` is the CATCH-UP mode: drain
+    * every record available at start — rate-limited into micro-batches by
+    * the source's own admission limits, each folded through the same batch
+    * body — then STOP. This is the restart posture of a 100 TB/day
+    * pipeline: a crashed or nightly loop comes back, works off the backlog
+    * incrementally (bounded batches, not one giant job), exits, and hands
+    * the cluster back. The checkpoint carries source offsets across runs,
+    * so successive catch-ups process only what arrived since the last one
+    * — StreamingOpsSpec proves a second catch-up run resumes from the
+    * first's offsets. */
+  def foreachBatchLoop(
+      df: DataFrame,
+      checkpoint: String,
+      trigger: Trigger = Trigger.ProcessingTime(0L))(
+      batchFn: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        ingestBatch(batch, storePath, outPath)
-      }
-      .start()
-
-  /** [[ingestLoop]] in CATCH-UP mode: `Trigger.AvailableNow` drains every
-    * record available at start — rate-limited into micro-batches by the
-    * source's own admission limits, each folded through the SAME
-    * [[ingestBatch]] store-dedup — then STOPS on its own. This is the
-    * restart posture of a 100 TB/day pipeline: a crashed or nightly loop
-    * comes back, works off the backlog incrementally (bounded batches, not
-    * one giant job), exits, and hands the cluster back. The checkpoint
-    * carries source offsets across runs, so successive catch-ups process
-    * only what arrived since the last one — StreamingOpsSpec proves a
-    * second catch-up run resumes from the first's offsets. */
-  def ingestCatchUp(
-      docs: DataFrame,
-      storePath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        ingestBatch(batch, storePath, outPath)
-      }
+      .trigger(trigger)
+      .foreachBatch(batchFn)
       .start()
 
   private def readOrEmpty(spark: org.apache.spark.sql.SparkSession,
@@ -500,22 +492,6 @@ object StreamingOps extends Serializable {
       } finally survivors.unpersist()
     } finally bmem.unpersist()
   }
-
-  /** The continuous semantic-dedup ingest loop: [[ingestLoop]]'s shape with
-    * the member store as the accumulator. `centroids` is the persisted
-    * one-row centroid table the batch pipeline trained on history. */
-  def ingestLoopSemantic(
-      vecs: DataFrame,
-      centroids: DataFrame,
-      memPath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        ingestBatchSemantic(batch, centroids, memPath, outPath)
-      }
-      .start()
 
   /** One micro-batch of the NEAR-dup ingest loop: estimate-dedup `batch`
     * against the signature/band stores' current contents, emit survivors,
@@ -656,21 +632,6 @@ object StreamingOps extends Serializable {
     } finally bfp.unpersist()
   }
 
-  /** [[ingestBatchVideo]] as a continuous foreachBatch loop — the
-    * perceptual-dedup accumulator for a video ingest stream. */
-  def ingestLoopVideo(
-      docs: DataFrame,
-      fpPath: String,
-      bandPath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        ingestBatchVideo(batch, fpPath, bandPath, outPath)
-      }
-      .start()
-
   /** One micro-batch of the AUDIO ingest loop — the streaming twin of
     * `dedup_incremental_audio`, completing loop coverage of the
     * perceptual triangle (image and video have theirs): PCM-decode +
@@ -718,35 +679,6 @@ object StreamingOps extends Serializable {
     } finally bfp.unpersist()
   }
 
-  /** [[ingestBatchAudio]] as a continuous foreachBatch loop. */
-  def ingestLoopAudio(
-      docs: DataFrame,
-      fpPath: String,
-      bandPath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        ingestBatchAudio(batch, fpPath, bandPath, outPath)
-      }
-      .start()
-
-  /** [[ingestBatchImage]] as a continuous foreachBatch loop — the
-    * perceptual-dedup accumulator for an image ingest stream. */
-  def ingestLoopImage(
-      docs: DataFrame,
-      fpPath: String,
-      bandPath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        ingestBatchImage(batch, fpPath, bandPath, outPath)
-      }
-      .start()
-
   private def urlStoreSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("canonical",
       org.apache.spark.sql.types.StringType)))
@@ -784,19 +716,6 @@ object StreamingOps extends Serializable {
       fresh.select(col("chunk_hash")).write.mode("append").parquet(storePath)
     } finally fresh.unpersist()
   }
-
-  /** [[ingestBatchChunks]] as a continuous foreachBatch loop. */
-  def ingestLoopChunks(
-      docs: DataFrame,
-      storePath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        ingestBatchChunks(batch, storePath, outPath)
-      }
-      .start()
 
   private def chunkMemSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("chunk_hash",
@@ -892,22 +811,6 @@ object StreamingOps extends Serializable {
     } finally assigned.unpersist()
   }
 
-  /** [[ingestBatchChunkSemantic]] as a continuous foreachBatch loop — the
-    * near-dup-aware upgrade of [[ingestLoopChunks]]. `centroids` is the
-    * persisted one-row centroid table trained on history. */
-  def ingestLoopChunkSemantic(
-      docs: DataFrame,
-      centroids: DataFrame,
-      memPath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        ingestBatchChunkSemantic(batch, centroids, memPath, outPath, bid)
-      }
-      .start()
-
   /** One micro-batch of the URL ingest loop — the streaming twin of
     * `dedup_incremental_url`, sharing [[graft.operators.Dedup.canonicalUrl]]
     * and the [[graft.operators.Dedup.urlSurvivorsOn]] keep rule verbatim:
@@ -931,20 +834,6 @@ object StreamingOps extends Serializable {
       survivors.select(col("canonical")).write.mode("append").parquet(storePath)
     } finally survivors.unpersist()
   }
-
-  /** [[ingestBatchUrl]] as a continuous foreachBatch loop — the
-    * canonical-key accumulator for a crawl-frontier stream. */
-  def ingestLoopUrl(
-      docs: DataFrame,
-      storePath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        ingestBatchUrl(batch, storePath, outPath)
-      }
-      .start()
 
   /** `gen=<digits>` directory name → generation number; anything else
     * (a `gen=tmp` left by a tool, a stray file) is None rather than a
@@ -1529,35 +1418,6 @@ object StreamingOps extends Serializable {
     }
   }
 
-  /** [[ingestBatchUrlMergeParted]] as a continuous foreachBatch loop —
-    * the crawl-frontier upsert stream at its O(touched-bands) cost. */
-  def ingestLoopUrlMergeParted(
-      docs: DataFrame,
-      storePath: String,
-      outPath: String,
-      checkpoint: String,
-      numBands: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        ingestBatchUrlMergeParted(batch, storePath, outPath, bid, numBands)
-      }
-      .start()
-
-  /** [[ingestBatchUrlMerge]] as a continuous foreachBatch loop — the
-    * crawl-frontier upsert stream. */
-  def ingestLoopUrlMerge(
-      docs: DataFrame,
-      storePath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        ingestBatchUrlMerge(batch, storePath, outPath, bid)
-      }
-      .start()
-
   /** One micro-batch of the IVF-PQ INDEX-MAINTENANCE loop — the streaming
     * twin of `knn_ivf_pq_incremental` (faiss `add` as a stream): encode the
     * batch's vectors under the FROZEN artifacts — the coarse centroid table
@@ -1585,21 +1445,6 @@ object StreamingOps extends Serializable {
       .partitionBy("batch")
       .parquet(storePath)
   }
-
-  /** [[ingestBatchIvfPq]] as a continuous foreachBatch loop. */
-  def ingestLoopIvfPq(
-      vecs: DataFrame,
-      centroids: DataFrame,
-      cb: DataFrame,
-      dim: Int,
-      storePath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        ingestBatchIvfPq(batch, centroids, cb, dim, storePath, bid)
-      }
-      .start()
 
   private def spanStoreSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("h",
@@ -1642,19 +1487,6 @@ object StreamingOps extends Serializable {
         .parquet(spanPath)
     } finally g1.unpersist()
   }
-
-  /** [[ingestBatchSpans]] as a continuous foreachBatch loop. */
-  def ingestLoopSpans(
-      docs: DataFrame,
-      spanPath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        ingestBatchSpans(batch, spanPath, outPath, bid)
-      }
-      .start()
 
   private def driftStoreSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("t",
@@ -1739,20 +1571,6 @@ object StreamingOps extends Serializable {
     } finally bcnt.unpersist()
   }
 
-  /** [[ingestBatchDrift]] as a continuous foreachBatch loop — the
-    * production drift alarm riding the ingest stream itself. */
-  def driftStream(
-      docs: DataFrame,
-      storePath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        ingestBatchDrift(batch, storePath, outPath, bid)
-      }
-      .start()
-
   /** One micro-batch of the EMBEDDING-drift monitor — the streaming twin
     * of `drift_embedding_psi`, closing the drift family: assign the
     * batch's embeddings to the FROZEN serving codebook (`centroids`, the
@@ -1779,38 +1597,6 @@ object StreamingOps extends Serializable {
         .agg(count(lit(1)).as("c")),
       storePath, outPath, batchId)
   }
-
-  /** [[ingestBatchEmbeddingDrift]] as a continuous foreachBatch loop — the
-    * codebook-staleness alarm riding the embedding ingest stream.
-    * `centroids` is the persisted one-row centroid table the serving index
-    * was trained on. */
-  def ingestLoopEmbeddingDrift(
-      vecs: DataFrame,
-      centroids: DataFrame,
-      storePath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        ingestBatchEmbeddingDrift(batch, centroids, storePath, outPath, bid)
-      }
-      .start()
-
-  /** [[ingestLoop]]'s near-dup twin: the signature + band stores are the
-    * accumulator; each micro-batch folds into them via foreachBatch. */
-  def ingestLoopNearDup(
-      docs: DataFrame,
-      sigPath: String,
-      bandPath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        ingestBatchNearDup(batch, sigPath, bandPath, outPath)
-      }
-      .start()
 
   /** Custom-state session record: bounds in epoch millis + event count. */
   final case class SessionAcc(start: Long, end: Long, n: Long)

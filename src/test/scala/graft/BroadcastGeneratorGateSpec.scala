@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Regression gate for the round-19 broadcast cliff (r19 verdict item 2).
@@ -34,45 +33,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class BroadcastGeneratorGateSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
   private val dir = "/root/testdata/sf0.001"
-
-  /** Expand one node: through the AQE wrapper, into query-stage subplans,
-    * and into cached-relation plans (a materialize boundary hides the
-    * generator that produced the cached rows, but not from the estimator —
-    * pre-materialization, stats flow straight through the cache node). */
-  private def kids(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-      Seq(a.executedPlan)
-    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(q.plan)
-    case im: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-      Seq(im.relation.cachedPlan)
-    case other => other.children
-  }
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(allNodes)
-
-  /** A keyless (global) aggregate immediately under the exchange is ONE
-    * row by construction — the "1-row stats" allowance (e.g. a corpus
-    * total crossJoined back in); only trivial row-preserving nodes may sit
-    * between the exchange and the aggregate. */
-  @scala.annotation.tailrec
-  private def isOneRowByConstruction(p: SparkPlan): Boolean = p match {
-    case pr: org.apache.spark.sql.execution.ProjectExec => isOneRowByConstruction(pr.child)
-    case h: org.apache.spark.sql.execution.aggregate.HashAggregateExec =>
-      h.groupingExpressions.isEmpty
-    case o: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec =>
-      o.groupingExpressions.isEmpty
-    case s: org.apache.spark.sql.execution.aggregate.SortAggregateExec =>
-      s.groupingExpressions.isEmpty
-    case _ => false
-  }
-
-  /** Broadcast builds in `root` whose shipped side contains a generator
-    * and is not 1-row by construction. */
-  private def generatorBroadcasts(root: SparkPlan): Seq[SparkPlan] =
-    allNodes(root)
-      .collect { case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => b }
-      .filterNot(b => isOneRowByConstruction(b.child))
-      .filter(b => allNodes(b).exists(
-        _.isInstanceOf[org.apache.spark.sql.execution.GenerateExec]))
 
   /** The swept surface: every registered query in the pair-stream families
     * the r19 incident implicates — dedup_*, basket_*, contamination_*,
@@ -145,7 +105,7 @@ class BroadcastGeneratorGateSpec extends AnyFunSuite {
     val offenders = swept.flatMap { name =>
       val df: DataFrame = SparkEntry.queries(name)(spark, dir)
       val static = df.queryExecution.executedPlan // NOT collected: pre-AQE
-      val bad = generatorBroadcasts(static).groupBy(_.id).map(_._2.head).toSeq
+      val bad = PlanAudit.generatorBroadcasts(static).groupBy(_.id).map(_._2.head).toSeq
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       spark.sharedState.cacheManager.clearCache()
       countedBounded.get(name) match {

@@ -25,17 +25,26 @@ class DotProductFusionSpec extends AnyFunSuite {
   private def hofDot = expr(
     "aggregate(zip_with(a, b, (x, y) -> x * y), 0.0d, (acc, v) -> acc + v)")
 
-  private def withRule[T](f: => T): T = {
-    GraftExtensions.register(spark) // installs the experimental optimization
-    try f
-    finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == graft.plans.DotProductFusion)
+  /** Runs `f` with the rule installed (`on`) or explicitly absent, then
+    * restores the session's prior optimizations exactly. A suite earlier in
+    * the JVM may already have installed it (Graft.session and
+    * TopKPerGroup.apply both register it), so an "unfused" baseline taken
+    * without removing it would compare fused with fused, and stripping it
+    * afterwards would change the shared session for every later suite. */
+  private def withRule[T](on: Boolean)(f: => T): T = {
+    val prior = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations =
+      prior.filterNot(_ == graft.plans.DotProductFusion) ++
+        (if (on) Seq(graft.plans.DotProductFusion) else Nil)
+    try f finally spark.experimental.extraOptimizations = prior
   }
 
   test("HOF dot product fuses to graft_dot and keeps bit-exact values") {
-    val unfused = arrays.select(col("doc_id"), hofDot.as("d"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val (fused, plan) = withRule {
+    val unfused = withRule(on = false) {
+      arrays.select(col("doc_id"), hofDot.as("d"))
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    }
+    val (fused, plan) = withRule(on = true) {
       val q = arrays.select(col("doc_id"), hofDot.as("d"))
       (q.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap,
         q.queryExecution.optimizedPlan.toString)
@@ -51,7 +60,7 @@ class DotProductFusionSpec extends AnyFunSuite {
       "aggregate(zip_with(a, b, (x, y) -> x * y), 1.0d, (acc, v) -> acc + v)")
     val sumNotProduct = expr(
       "aggregate(zip_with(a, b, (x, y) -> x + y), 0.0d, (acc, v) -> acc + v)")
-    withRule {
+    withRule(on = true) {
       for ((e, label) <- Seq((wrongZero, "non-zero seed"), (sumNotProduct, "non-product zip"))) {
         val plan = arrays.select(e.as("d")).queryExecution.optimizedPlan.toString
         assert(!plan.contains("graft_dot"), s"$label must not fuse:\n$plan")
@@ -66,9 +75,11 @@ class DotProductFusionSpec extends AnyFunSuite {
       .select(col("doc_id"),
         expr("transform(sequence(1, CAST(pmod(doc_id, 4) + 2 AS INT)), x -> x * 0.5d)").as("a"),
         expr("transform(sequence(1, CAST(pmod(doc_id, 3) + 2 AS INT)), x -> x * 2.0d)").as("b"))
-    val unfused = skewed.select(col("doc_id"), hofDot.as("d"))
-      .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
-    val (fused, plan) = withRule {
+    val unfused = withRule(on = false) {
+      skewed.select(col("doc_id"), hofDot.as("d"))
+        .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
+    }
+    val (fused, plan) = withRule(on = true) {
       val q = skewed.select(col("doc_id"), hofDot.as("d"))
       (q.collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap,
         q.queryExecution.optimizedPlan.toString)
@@ -87,7 +98,7 @@ class DotProductFusionSpec extends AnyFunSuite {
       .select(
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("a"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("b"))
-    withRule {
+    withRule(on = true) {
       val plan = df.select(hofDot.as("d")).queryExecution.optimizedPlan.toString
       assert(!plan.contains("graft_dot"), s"nullable elements must not fuse:\n$plan")
     }

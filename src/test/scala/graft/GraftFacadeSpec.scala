@@ -26,5 +26,9 @@ class GraftFacadeSpec extends AnyFunSuite {
     val dot = s.sql("SELECT graft_dot(array(1.0d,2.0d), array(3.0d,4.0d)) AS d")
       .collect().head.getDouble(0)
     assert(dot === 11.0)
+    // the mains rely on the factory, not on operator bodies, to install
+    // graft's planner strategy and optimizer rule
+    assert(s.experimental.extraStrategies.contains(graft.plans.TopKPerGroupStrategy))
+    assert(s.experimental.extraOptimizations.contains(graft.plans.DotProductFusion))
   }
 }

@@ -68,9 +68,10 @@ class IncrementalAudioSpec extends AnyFunSuite {
     }.find { c => val d = hamming(h0, fp(c)); d >= 1 && d <= ImageDedup.MaxDist }.get
     val tmp = java.nio.file.Files.createTempDirectory("graft-audloop").toString
     val input = MemoryStream[(Long, Array[Byte])]
-    val q = graft.streaming.StreamingOps.ingestLoopAudio(
-      input.toDF().toDF("doc_id", "payload"),
-      s"$tmp/fp", s"$tmp/band", s"$tmp/out", s"$tmp/ckpt")
+    val q = graft.streaming.StreamingOps.foreachBatchLoop(
+      input.toDF().toDF("doc_id", "payload"), s"$tmp/ckpt")(
+      (b, _) => graft.streaming.StreamingOps.ingestBatchAudio(
+        b, s"$tmp/fp", s"$tmp/band", s"$tmp/out"))
     try {
       input.addData((1L, MediaCodec.encodeWav(8000, base)))
       q.processAllAvailable()

@@ -56,9 +56,10 @@ class IncrementalVideoSpec extends AnyFunSuite {
 
     val base = java.nio.file.Files.createTempDirectory("graft-vidloop").toString
     val input = MemoryStream[(Long, Array[Byte])]
-    val q = graft.streaming.StreamingOps.ingestLoopVideo(
-      input.toDF().toDF("doc_id", "payload"),
-      s"$base/fp", s"$base/band", s"$base/out", s"$base/ckpt")
+    val q = graft.streaming.StreamingOps.foreachBatchLoop(
+      input.toDF().toDF("doc_id", "payload"), s"$base/ckpt")(
+      (b, _) => graft.streaming.StreamingOps.ingestBatchVideo(
+        b, s"$base/fp", s"$base/band", s"$base/out"))
     try {
       input.addData((1L, orig))
       q.processAllAvailable()

@@ -40,8 +40,8 @@ class IngestImageSpec extends AnyFunSuite {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = java.nio.file.Files.createTempDirectory("graft-imgloop").toString
     val input = MemoryStream[StreamImg]
-    val q = StreamingOps.ingestLoopImage(
-      input.toDF(), s"$base/fp", s"$base/band", s"$base/out", s"$base/ckpt")
+    val q = StreamingOps.foreachBatchLoop(input.toDF(), s"$base/ckpt")(
+      (b, _) => StreamingOps.ingestBatchImage(b, s"$base/fp", s"$base/band", s"$base/out"))
     val a = hillBmp(32, 32, 12, 10)
     try {
       input.addData(StreamImg(1, a), StreamImg(2, rampBmp(32, 32, vertical = true)))
